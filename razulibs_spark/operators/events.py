@@ -9,7 +9,7 @@ final resources DataFrame resolves "late" by construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -52,6 +52,42 @@ EVENT_TYPES = {
 LOCK_EVENT = "ine"  # terminal event ⇒ log locked (preservation_events.py:40-42)
 
 
+def _event_rows(
+    base: DataFrame,
+    event_type: str,
+    actor: str,
+    outcome: str | Column = "suc",
+    note: Column | None = None,
+    tool: str | None = None,
+    description: str | None = None,
+) -> DataFrame:
+    """One event per `_subject` row of `base`: `_subject` plus every
+    EVENT_SCHEMA column except event_id. Numbering is left to the
+    caller, so several event groups can share one dense_ids pass."""
+    return base.select(
+        F.col("_subject"),
+        F.lit(event_type).alias("event_type"),
+        F.array(F.col("_subject")).alias("subjects"),
+        F.lit(actor).alias("implemented_by"),
+        F.lit(outcome).alias("outcome"),
+        (F.lit(None) if note is None else note).cast("string").alias("outcome_note"),
+        F.lit(None).cast("timestamp").alias("started_at"),
+        F.current_timestamp().alias("ended_at"),
+        F.lit(tool).cast("string").alias("tool"),
+        F.lit(None).cast("string").alias("generated"),
+        F.lit(description).cast("string").alias("description"),
+    )
+
+
+def _numbered(rows: DataFrame, id_offset: int) -> DataFrame:
+    """_event_rows numbered densely from id_offset + 1 by subject."""
+    from razulibs_spark.operators.ids import dense_ids
+
+    return dense_ids(rows, ["_subject"], "event_id", start=id_offset + 1).select(
+        *EVENT_SCHEMA.fieldNames()
+    )
+
+
 def build_events(
     subjects: DataFrame,
     subject_col: str,
@@ -67,25 +103,12 @@ def build_events(
     one Python object per call site). Event ids are dense from
     id_offset — derive the offset with `max_event_id` on the existing
     log (S8) to append monotonically."""
-    from razulibs_spark.operators.ids import dense_ids
-
     if event_type not in EVENT_TYPES.values():
         raise ValueError(f"unknown PREMIS event code {event_type!r}")
-    base = subjects.select(F.col(subject_col).alias("_subject"))
-    base = dense_ids(base, ["_subject"], "event_id", start=id_offset + 1)
-    return base.select(
-        F.col("event_id"),
-        F.lit(event_type).alias("event_type"),
-        F.array(F.col("_subject")).alias("subjects"),
-        F.lit(actor).alias("implemented_by"),
-        F.lit(outcome).alias("outcome"),
-        (F.col(note_col) if note_col else F.lit(None).cast("string")).alias("outcome_note"),
-        F.lit(None).cast("timestamp").alias("started_at"),
-        F.current_timestamp().alias("ended_at"),
-        F.lit(tool).cast("string").alias("tool"),
-        F.lit(None).cast("string").alias("generated"),
-        F.lit(description).cast("string").alias("description"),
-    )
+    rows = _event_rows(
+        subjects.withColumn("_subject", F.col(subject_col)), event_type, actor,
+        outcome, F.col(note_col) if note_col else None, tool, description)
+    return _numbered(rows, id_offset)
 
 
 def max_event_id(events: DataFrame, id_col: str = "event_id") -> int:
@@ -102,40 +125,27 @@ def is_locked(events: DataFrame, lock_type: str = LOCK_EVENT) -> bool:
     return bool(events.filter(F.col("event_type") == lock_type).limit(1).count())
 
 
+def _fixity_rows(manifest: DataFrame, fs_scan: DataFrame, actor: str) -> DataFrame:
+    """Fixity verification (razu/sip.py:168-171): recompute-and-compare
+    as a join, one unnumbered `fix` event row per file with the
+    outcome."""
+    expected = manifest.select(F.col("filename").alias("_subject"), "md5hash")
+    actual = fs_scan.select(F.col("filename").alias("_subject"),
+                            F.col("md5hash").alias("_actual"))
+    checked = expected.join(actual, "_subject", "left")
+    outcome = F.when(F.col("_actual").isNull() | (F.col("_actual") != F.col("md5hash")),
+                     F.lit("fail")).otherwise(F.lit("suc"))
+    return _event_rows(checked, "fix", actor, outcome,
+                       F.coalesce(F.col("_actual"), F.lit("missing")),
+                       description="Fixity check")
+
+
 def fixity_check_events(
     manifest: DataFrame, fs_scan: DataFrame, actor: str, id_offset: int = 0
 ) -> DataFrame:
-    """Fixity verification (razu/sip.py:168-171): recompute-and-compare
-    as a join, emitting one `fix` event per file with the outcome."""
-    from razulibs_spark.operators.ids import dense_ids
-
-    joined = manifest.select("filename", F.col("md5hash").alias("_expected")).join(
-        fs_scan.select("filename", F.col("md5hash").alias("_actual")),
-        "filename",
-        "left",
-    )
-    checked = joined.select(
-        F.col("filename").alias("_subject"),
-        F.when(F.col("_actual").isNull(), F.lit("fail"))
-        .when(F.col("_actual") != F.col("_expected"), F.lit("fail"))
-        .otherwise(F.lit("suc"))
-        .alias("outcome"),
-        F.coalesce(F.col("_actual"), F.lit("missing")).alias("outcome_note"),
-    )
-    checked = dense_ids(checked, ["_subject"], "event_id", start=id_offset + 1)
-    return checked.select(
-        "event_id",
-        F.lit("fix").alias("event_type"),
-        F.array(F.col("_subject")).alias("subjects"),
-        F.lit(actor).alias("implemented_by"),
-        F.col("outcome"),
-        F.col("outcome_note"),
-        F.lit(None).cast("timestamp").alias("started_at"),
-        F.current_timestamp().alias("ended_at"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("string").alias("generated"),
-        F.lit("Fixity check").alias("description"),
-    )
+    """One `fix` event per manifest file, ids dense from id_offset + 1
+    in filename order."""
+    return _numbered(_fixity_rows(manifest, fs_scan, actor), id_offset)
 
 
 def events_to_triples(events: DataFrame, base_uri: str) -> DataFrame:

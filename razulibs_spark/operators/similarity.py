@@ -993,7 +993,7 @@ def random_projection(
     # would render as a decimal literal that Spark parses as DECIMAL
     # (unlike F.lit's DoubleType), silently changing arithmetic typing
     # (ADVICE r13). Pin the previous F.lit(int) semantics loudly.
-    if not isinstance(scale, int):
+    if not isinstance(scale, int) or isinstance(scale, bool):
         raise TypeError(f"random_projection: scale must be int, got {scale!r}")
     # One F.expr parse for the whole out_dim·in_dim literal matrix:
     # the Column-builder form issued ~out_dim·(in_dim+3) py4j round
@@ -1112,7 +1112,7 @@ def kmeans_lloyd(
         raise ValueError("k and iters must be >= 1")
     # shift is rendered into SQL text as an int literal (ADVICE r13 —
     # a float would parse as DECIMAL and change arithmetic typing).
-    if not isinstance(shift, int):
+    if not isinstance(shift, int) or isinstance(shift, bool):
         raise TypeError(f"kmeans_lloyd: shift must be int, got {shift!r}")
     q = embeddings.select(
         "vec_id",

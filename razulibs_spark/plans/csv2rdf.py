@@ -53,13 +53,19 @@ def resolve_terms(facts: DataFrame, vocab: DataFrame, column: str,
     return facts.join(F.broadcast(dim), column, "left")
 
 
+def _zero_pad(c: F.Column, width: int) -> F.Column:
+    """`{n:0<width>d}` on a digit string: pads to width, never cuts
+    (F.lpad truncates longer values)."""
+    return F.when(F.length(c) < width, F.lpad(c, width, "0")).otherwise(c)
+
+
 def compose_filename(doos: F.Column, volg: F.Column) -> F.Column:
     """F9 maak_bestandsnaam (extra.py:46-54):
     `{jaar}_{nummer:02d}_{volgnummer:03d}.jpg` from `Doos-nummer`."""
     jaar = F.split_part(doos, F.lit("-"), F.lit(1))
-    nummer = F.lpad(F.split_part(doos, F.lit("-"), F.lit(2)), 2, "0")
+    nummer = _zero_pad(F.split_part(doos, F.lit("-"), F.lit(2)), 2)
     return F.concat(
-        F.concat_ws("_", jaar, nummer, F.lpad(volg.cast("string"), 3, "0")),
+        F.concat_ws("_", jaar, nummer, _zero_pad(volg.cast("string"), 3)),
         F.lit(".jpg"),
     )
 

@@ -14,11 +14,13 @@ per-file hashing; the lock is the P6 predicate gating mutating calls.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from razulibs_spark.operators import events as ev
+from razulibs_spark.operators.ids import dense_ids
 from razulibs_spark.operators.manifest import (
     manifest_from_directory,
     manifest_to_json_map,
@@ -37,7 +39,6 @@ def assemble_sip(
     sip_dir: str,
     actor: str = "https://data.razu.nl/id/actor/razu",
     event_base: str = "https://data.razu.nl/id/event/sip",
-    distributed: bool = True,
 ) -> dict:
     """Write metadata documents, build the manifest from what landed on
     disk, emit the PREMIS provenance in dependency order, and lock.
@@ -46,34 +47,30 @@ def assemble_sip(
     'n_documents': int}. Raises SipLockedError when the directory's
     event log already carries ingestion_end (O6 lock gate).
 
-    ``distributed`` (default True) writes the per-entity metadata
-    files from the executors — the scalable mode, byte-identical to
-    the driver-collect mode (golden-tested) and correct whenever
-    ``sip_dir`` is on a filesystem every executor mounts, which a SIP
-    staging area on a real cluster is (and local[n] trivially is).
-    Pass False only for a driver-local scratch directory on a
-    multi-machine cluster."""
+    The per-entity metadata files are written from the executors, so
+    ``sip_dir`` must be on a filesystem every executor mounts — which
+    a SIP staging area on a real cluster is (and local[n] trivially
+    is). A directory that is not shared raises RuntimeError: the
+    manifest scan then finds fewer files than were written."""
     eventlog_path = os.path.join(sip_dir, "eventlog.nt")
     if os.path.exists(eventlog_path):
         prior = _read_eventlog(spark, eventlog_path)
         if ev.is_locked(prior):
             raise SipLockedError(f"SIP at {sip_dir} is locked (ingestion_end)")
 
-    # K1: one .meta.json per entity (executor-side by default).
-    n_docs = write_jsonld_per_entity(
-        triples, sip_dir, distributed=distributed
-    )
+    # K1: one .meta.json per entity, written executor-side.
+    n_docs = write_jsonld_per_entity(triples, sip_dir)
 
     # S6/F7: manifest from ONE distributed scan of the written files.
-    manifest = manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/").filter(
+    base = sip_dir.rstrip("/") + "/"
+    manifest = manifest_from_directory(spark, sip_dir, base_segment=base).filter(
         F.col("filename").endswith(".meta.json")
     ).persist()
 
-    # Shared-FS assumption made LOUD (ADVICE r8): with distributed
-    # writes on a cluster whose sip_dir is NOT actually shared, files
-    # land on executor-local disks and the manifest scan under-counts
-    # — an incomplete archival SIP with no error. The two counts are
-    # both already materialized; a mismatch is a data-integrity
+    # Shared-FS assumption made LOUD (ADVICE r8): on a cluster whose
+    # sip_dir is NOT actually shared, files land on executor-local
+    # disks and the manifest scan under-counts — an incomplete
+    # archival SIP with no error. A mismatch is a data-integrity
     # failure, never a warning.
     n_files = manifest.count()
     if n_files != n_docs:
@@ -81,30 +78,28 @@ def assemble_sip(
             f"assemble_sip: manifest scan found {n_files} metadata "
             f"files but {n_docs} were written — sip_dir {sip_dir!r} "
             "is not a filesystem every executor mounts (or writes "
-            "were lost); re-run with distributed=False or point "
-            "sip_dir at shared storage"
+            "were lost); point sip_dir at shared storage"
         )
 
-    # Events in dependency order (ids dense across the groups, S8/A3):
-    # ingestion_start → one mem per document → one fix per manifest
-    # entry → ingestion_end. Built AFTER the manifest frame exists, so
-    # subjects are final-state — the deferred-queue semantics for free.
-    start_ev = ev.build_events(
-        spark.createDataFrame([(sip_dir,)], "uri string"), "uri",
-        "ins", actor=actor, description="Ingestion started.")
-    mem_ev = ev.build_events(
-        manifest.select(F.col("filename").alias("uri")), "uri",
-        "mem", actor=actor, description="Metadata object created.",
-        id_offset=1)
-    fix_ev = ev.fixity_check_events(
-        manifest, manifest_from_directory(spark, sip_dir, base_segment=sip_dir.rstrip("/") + "/"),
-        actor=actor, id_offset=1 + n_files)
-    end_ev = ev.build_events(
-        spark.createDataFrame([(sip_dir,)], "uri string"), "uri",
-        "ine", actor=actor, description="Ingestion ended.",
-        id_offset=1 + 2 * n_files)
-    events = (
-        start_ev.unionByName(mem_ev).unionByName(fix_ev).unionByName(end_ev)
+    # Events in dependency order, numbered densely by ONE dense_ids
+    # over (group, subject) (S8/A3): ingestion_start → one mem per
+    # document → one fix per manifest entry (a re-scan recomputes the
+    # checksums) → ingestion_end. Built AFTER the manifest frame
+    # exists, so subjects are final-state — the deferred-queue
+    # semantics for free.
+    sip_row = spark.createDataFrame([(sip_dir,)], "_subject string")
+    groups = [
+        ev._event_rows(sip_row, "ins", actor, description="Ingestion started."),
+        ev._event_rows(manifest.select(F.col("filename").alias("_subject")),
+                       "mem", actor, description="Metadata object created."),
+        ev._fixity_rows(manifest, manifest_from_directory(
+            spark, sip_dir, base_segment=base), actor),
+        ev._event_rows(sip_row, "ine", actor, description="Ingestion ended."),
+    ]
+    rows = reduce(DataFrame.unionByName,
+                  (g.withColumn("_group", F.lit(i)) for i, g in enumerate(groups)))
+    events = dense_ids(rows, ["_group", "_subject"], "event_id").select(
+        *ev.EVENT_SCHEMA.fieldNames()
     ).persist()
 
     # K3 + K4 sinks: byte-compatible manifest map, eventlog as RDF.

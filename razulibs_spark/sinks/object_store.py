@@ -67,7 +67,10 @@ class LocalFSClient:
     """Deterministic object-store fake over a local directory tree
     (bucket/key → file). Implements the boto3 surface the sinks use;
     also records per-call batch sizes so tests can assert the ≤1000
-    chunking actually happened."""
+    chunking actually happened. Object metadata (ExtraArgs, ACLs)
+    lives in sidecar files under `<root>/_sidecars/`, outside every
+    bucket's key space, so any key — `x.meta.json` included — is an
+    object."""
 
     def __init__(self, root: str):
         self.root = root
@@ -75,12 +78,17 @@ class LocalFSClient:
     def _path(self, bucket: str, key: str) -> str:
         return os.path.join(self.root, bucket, key)
 
+    def _sidecar(self, bucket: str, key: str, ext: str) -> str:
+        path = os.path.join(self.root, "_sidecars", bucket, key + ext)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        return path
+
     def upload_file(self, Filename, Bucket, Key, ExtraArgs=None):
         dst = self._path(Bucket, Key)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         shutil.copyfile(Filename, dst)
         if ExtraArgs:
-            with open(dst + ".meta.json", "w") as fh:
+            with open(self._sidecar(Bucket, Key, ".meta.json"), "w") as fh:
                 json.dump(ExtraArgs, fh, sort_keys=True)
 
     def delete_objects(self, Bucket, Delete):
@@ -100,8 +108,6 @@ class LocalFSClient:
         out = []
         for dirpath, _, files in os.walk(base):
             for f in files:
-                if f.endswith(".meta.json"):
-                    continue
                 full = os.path.join(dirpath, f)
                 key = os.path.relpath(full, base)
                 if key.startswith(Prefix):
@@ -113,11 +119,11 @@ class LocalFSClient:
     def copy_object(self, Bucket, Key, CopySource, Metadata=None,
                     MetadataDirective=None):
         if MetadataDirective == "REPLACE":
-            with open(self._path(Bucket, Key) + ".meta.json", "w") as fh:
+            with open(self._sidecar(Bucket, Key, ".meta.json"), "w") as fh:
                 json.dump(Metadata or {}, fh, sort_keys=True)
 
     def put_object_acl(self, Bucket, Key, ACL):
-        with open(self._path(Bucket, Key) + ".acl", "w") as fh:
+        with open(self._sidecar(Bucket, Key, ".acl"), "w") as fh:
             fh.write(ACL)
 
 

@@ -80,10 +80,13 @@ def _triple_set(df):
 
 
 def test_compose_filename(spark):
-    df = spark.createDataFrame([("1984-1", 1), ("1985-12", 23)], ["d", "v"])
+    df = spark.createDataFrame(
+        [("1984-1", 1), ("1985-12", 23), ("1990-5", 1234), ("1991-123", 7)],
+        ["d", "v"])
     got = [r[0] for r in df.select(
         compose_filename(F.col("d"), F.col("v"))).collect()]
-    assert got == ["1984_01_001.jpg", "1985_12_023.jpg"]
+    assert got == ["1984_01_001.jpg", "1985_12_023.jpg", "1990_05_1234.jpg",
+                   "1991_123_007.jpg"]
 
 
 def test_csv2rdf_golden_triples(spark):
@@ -170,18 +173,10 @@ def test_per_entity_files_and_sip_scan(spark, tmp_path):
     assert n == 11
     back = scan_sip_dir(spark, sip)
     assert back.select("entity_id").distinct().count() == 11
-    # Distributed sink (local[n] shares the FS, so executor writes
-    # land in the same directory): byte-identical layout and content.
-    import os as _os
-
-    sip2 = str(tmp_path / "sip_dist")
-    assert write_jsonld_per_entity(triples, sip2, distributed=True) == 11
-    assert sorted(_os.listdir(sip2)) == sorted(_os.listdir(sip))
-    for f in _os.listdir(sip):
-        with open(_os.path.join(sip, f)) as a, open(
-            _os.path.join(sip2, f)
-        ) as b:
-            assert a.read() == b.read(), f
+    # Executor-side writes: one file per entity, holding its document.
+    want = {r["entity"] + ".meta.json": r["jsonld"] + "\n"
+            for r in jsonld_docs(triples).collect()}
+    assert {f.name: f.read_text() for f in (tmp_path / "sip").iterdir()} == want
     # S5 id extraction matches the K1 filenames:
     assert back.filter(F.col("entity_id") == "NL-WbDRAZU-G0321-661-1").count() > 0
     assert _triple_set(back.drop("entity_id")) == _triple_set(triples)
@@ -315,31 +310,17 @@ def test_sip_assembly_and_lock(spark, tmp_path):
     assert by_type == {"ins": 1, "mem": 11, "fix": 11, "ine": 1}
     assert ev.filter(F.col("event_type") == "fix")
     assert ev.filter(F.col("outcome") != "suc").count() == 0
-    ids = sorted(r["event_id"] for r in ev.select("event_id").collect())
-    assert ids == list(range(1, 25))
+    # One dense numbering in dependency order: ins=1, mem=2..12 and
+    # fix=13..23 (each ascending by filename), ine=24.
+    rows = sorted(ev.select("event_id", "event_type", "subjects").collect())
+    assert [r["event_id"] for r in rows] == list(range(1, 25))
+    assert [r["event_type"] for r in rows] == ["ins"] + ["mem"] * 11 + ["fix"] * 11 + ["ine"]
+    files = sorted(r["filename"] for r in manifest.select("filename").collect())
+    assert [r["subjects"] for r in rows] == (
+        [[sip]] + [[f] for f in files] * 2 + [[sip]])
     # O6: the terminal ingestion_end locks the SIP.
     with pytest.raises(SipLockedError):
         assemble_sip(spark, triples, sip)
-    # The default assembly above wrote metadata executor-side
-    # (distributed=True, plans/sip.py); the driver-collect mode must
-    # produce the byte-identical SIP — golden parity between the
-    # scalable default and the reference-shaped fallback.
-    import os as _os
-
-    sip_drv = str(tmp_path / "sip_driver")
-    out2 = assemble_sip(spark, triples, sip_drv, distributed=False)
-    assert out2["n_documents"] == 11
-    meta = sorted(
-        f for f in _os.listdir(sip) if f.endswith(".meta.json")
-    )
-    assert meta == sorted(
-        f for f in _os.listdir(sip_drv) if f.endswith(".meta.json")
-    )
-    for f in meta:
-        with open(_os.path.join(sip, f), "rb") as a, open(
-            _os.path.join(sip_drv, f), "rb"
-        ) as b:
-            assert a.read() == b.read(), f
 
 
 def test_collect_rdf_lifecycle(spark, tmp_path):

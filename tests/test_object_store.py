@@ -72,9 +72,24 @@ def test_acl_and_metadata_rewrite(spark, store):
     one = manifest.filter(F.col("key").contains("doc_0"))
     obs.update_acl(one, "edepot", factory, acl="public-read")
     obs.rewrite_metadata(one, "edepot", factory, meta_cols=["source"])
-    base = os.path.join(root, "edepot", "661/000/doc_0.txt")
+    base = os.path.join(root, "_sidecars", "edepot", "661/000/doc_0.txt")
     assert open(base + ".acl").read() == "public-read"
     assert '"razu"' in open(base + ".meta.json").read()
+    # sidecars sit outside the bucket: the listing still holds 5 objects
+    assert obs.list_objects(spark, factory, "edepot").count() == 5
+
+
+def test_list_objects_returns_meta_json_keys(spark, tmp_path):
+    """A key ending in .meta.json (every SIP document) is an object
+    like any other: it is listed with its size."""
+    src = tmp_path / "x.meta.json"
+    src.write_text('{"@graph": []}\n')
+    factory = obs.make_local_client_factory(str(tmp_path / "root"))
+    factory().upload_file(str(src), "edepot", "sip/x.meta.json",
+                          ExtraArgs={"ContentType": "application/json"})
+    got = [(r["key"], r["size"]) for r in
+           obs.list_objects(spark, factory, "edepot").collect()]
+    assert got == [("sip/x.meta.json", src.stat().st_size)]
 
 
 # ---------------------------------------------------------------------------

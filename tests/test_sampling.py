@@ -534,6 +534,13 @@ def test_random_projection_matches_numpy(spark, sf_dir):
         want = scaled / 8e6
         for j in range(16):
             assert got[(row["vec_id"], j)] == want[j]
+    # scale is rendered into SQL as an int literal: a float or a bool
+    # (an int subclass) is rejected before any plan is built
+    import pytest
+
+    for bad in (True, 1.5):
+        with pytest.raises(TypeError, match="scale must be int"):
+            similarity.random_projection(emb, scale=bad)
 
 
 def test_skew_profile_values(spark, sf_dir):
@@ -942,6 +949,11 @@ def test_kmeans_lloyd_tie_breaks_to_smallest_centroid_id(spark):
     out = kmeans_lloyd(emb, k=2, iters=2).collect()
     assert {r.cluster_id for r in out} == {0}
     assert all(r.dist_scaled == 0 for r in out)
+    import pytest
+
+    for bad in (True, 2.0):
+        with pytest.raises(TypeError, match="shift must be int"):
+            kmeans_lloyd(emb, k=2, iters=1, shift=bad)
 
 
 def test_kmeans_lloyd_assignment_plan_has_no_shuffle(spark, sf_dir):
