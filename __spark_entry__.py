@@ -132,7 +132,7 @@ _PREVIOUSLY_VERIFIED = frozenset({
     "k1_jsonld_roundtrip", "k2_ntriples_roundtrip",
     "k2_rdfxml_roundtrip", "k2_trig_roundtrip", "k2_trix_roundtrip",
     "k2_turtle_foreign", "k2_turtle_grouped_roundtrip",
-    "k2_turtle_roundtrip", "k2_turtle_sharded_roundtrip",
+    "k2_turtle_sharded_roundtrip",
     "length_histogram", "mixture_sample", "multimodal_audio_spectral",
     "multimodal_chunk_audio", "multimodal_decode",
     "multimodal_features", "multimodal_gif_decode",

@@ -244,7 +244,6 @@ R05_ADDITIONS = [
     "s7_manifest_map_scan",
     "k2_ntriples_roundtrip",
     "k1_jsonld_roundtrip",
-    "k2_turtle_roundtrip",
     "streaming_sessionize",
     "j2_multilabel_resolve",
     "a_rollup_pricing",

@@ -66,6 +66,6 @@ def collect_rdf(spark: SparkSession, *jsonld_paths: str) -> DataFrame:
 def collect_rdf_to_turtle(spark: SparkSession, out_path: str,
                           *jsonld_paths: str) -> None:
     """End of the lifecycle: combined graph → distributed Turtle (K2)."""
-    from razulibs_spark.sources.rdf_io import write_turtle
+    from razulibs_spark.sources.turtle_full import write_turtle_grouped
 
-    write_turtle(collect_rdf(spark, *jsonld_paths), out_path)
+    write_turtle_grouped(collect_rdf(spark, *jsonld_paths), out_path)

@@ -204,16 +204,16 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     the extension decides, with an explicit override —
     content-sniffing a 100 TB input is not a plan, a schema is).
 
-    All eight reference formats dispatch: the line-framed five
-    (jsonld/nt/ttl/n3/nq) parse per input split; the document-framed
+    All eight reference formats dispatch: the line-framed three
+    (jsonld/nt/nq) parse per input split; Turtle/N3
+    (sources/turtle_full.py, full grammar) and the document-framed
     three (rdfxml/trig/trix — sources/rdfxml.py) parse per file.
     Graph labels of quad formats (nquads/trig/trix) are dropped here —
     S4's contract is a triples frame; use the readers directly for the
     quad shape."""
-    from razulibs_spark.sources.rdf_io import (
-        read_nquads, read_ntriples, read_turtle,
-    )
+    from razulibs_spark.sources.rdf_io import read_nquads, read_ntriples
     from razulibs_spark.sources.rdfxml import read_rdfxml, read_trig, read_trix
+    from razulibs_spark.sources.turtle_full import read_turtle_full
 
     if fmt is None:
         low = path.lower().rstrip("/")
@@ -240,7 +240,7 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     if fmt == "ntriples":
         return read_ntriples(spark, path)
     if fmt in ("turtle", "n3"):
-        return read_turtle(spark, path)
+        return read_turtle_full(spark, path)
     if fmt == "nquads":
         return read_nquads(spark, path).drop("g")
     if fmt in ("rdfxml", "xml"):

@@ -1,20 +1,16 @@
-"""RDF serialization sinks/sources — SURVEY.md §2.1 (K1/K2, S3/S4).
+"""RDF line-format serialization sinks/sources — SURVEY.md §2.1 (K2, S4).
 
 N-Triples is the distributed-friendly interchange form: one triple per
 line, no document state, so a triples DataFrame maps to `write.text`
 with a per-row formatter and parses back with per-line regexes — both
-directions scale linearly and shuffle nothing. Turtle output adds the
-11-prefix header of razu/meta_graph.py:19-29 and per-subject grouping;
-it is produced per-partition (each partition's subjects are complete
-because we repartition by subject first).
+directions scale linearly and shuffle nothing. N-Quads parses the same
+way with an optional graph term. Turtle lives in sources/turtle_full.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from razulibs_spark.operators.rdf import EXPANSIONS, NAMESPACES, TRIPLE_SCHEMA
 
 
 def _escape_literal(col: Column) -> Column:
@@ -77,10 +73,6 @@ def write_ntriples(triples: DataFrame, path: str) -> None:
     ).text(path)
 
 
-TURTLE_HEADER = "".join(
-    f"@prefix {k}: <{v}> .\n" for k, v in sorted(NAMESPACES.items())
-)
-
 # Literal bodies use the UNROLLED loop form [^"\\]*(?:\\.[^"\\]*)*
 # (same language as (?:[^"\\]|\\.)*): the per-character alternation
 # makes java.util.regex re-branch on every byte of every literal —
@@ -111,7 +103,7 @@ _NT_RE = (
 # expression to n_groups sibling columns copies the whole
 # split(regexp_replace(...)) tree into each of them — the regex then
 # executes ~2·n_groups times per line (measured 26 copies in the
-# executed plan for the 13-group Turtle reader, 4.3 s of the 10 s
+# executed plan of a 13-group line reader, 4.3 s of its 10 s
 # roundtrip at sf0.1). With the array as a named column in a producer
 # projection, CollapseProject keeps it materialized (a non-cheap
 # producer expression referenced more than once is never inlined) and
@@ -209,197 +201,6 @@ def read_ntriples(spark, path: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Turtle (S4/K2) — line-oriented subset: one triple per line terminated
-# by ` .`, prefixed names, `a`, typed/tagged literals. No `;`/`,`
-# continuations or multi-line literals — exactly what write_turtle
-# emits, and the common shape of machine-generated Turtle. The
-# reference parses Turtle via rdflib (razu/turtle.py:6-32); rdflib is
-# deliberately absent here, and a driver-side parse would not scale —
-# this subset parses per line, so it distributes like N-Triples.
-
-# Every prefix the writer may compact with is declared in the header,
-# so each part file is a self-contained valid Turtle document and the
-# reader can re-expand without out-of-band state.
-TURTLE_FULL_HEADER = "".join(
-    f"@prefix {k}: <{v}> .\n" for k, v in sorted(EXPANSIONS.items())
-)
-
-# Local part of a prefixed name we are willing to emit (conservative
-# PN_LOCAL subset); anything else stays a full <IRI>.
-_PN_LOCAL_RE = r"^[A-Za-z0-9_][A-Za-z0-9_.\-]*$"
-
-
-def _compactable(col: Column | str) -> Column:
-    """Prefixed-name form of an absolute URI when the local part is
-    safe to emit, else null. Frequency-ordered chain (r13): safe
-    because the namespace set is pairwise prefix-free (guarded in
-    operators/rdf.py) — and the per-branch rlike then runs only for
-    the branch whose startswith matches, ~2 branches in instead of
-    ~11. A column NAME (str) builds the chain as one F.expr CASE
-    parse — ~90 py4j round-trips fewer per call (r13, driver-side
-    construction cost; same expression tree)."""
-    from razulibs_spark.operators.rdf import _ordered_expansions, _sq
-
-    if isinstance(col, str):
-        arms = "".join(
-            f"WHEN startswith(`{col}`, {_sq(ns)}) AND "
-            f"substring(`{col}`, {len(ns) + 1}, 1000000) RLIKE "
-            f"{_sq(_PN_LOCAL_RE)} THEN "
-            f"concat({_sq(k + ':')}, "
-            f"substring(`{col}`, {len(ns) + 1}, 1000000)) "
-            for k, ns in _ordered_expansions()
-        )
-        return F.expr(f"CASE {arms}ELSE CAST(NULL AS STRING) END")
-    out = None
-    for k, ns in _ordered_expansions():
-        local = F.substring(col, len(ns) + 1, 1_000_000)
-        cond = col.startswith(ns) & local.rlike(_PN_LOCAL_RE)
-        val = F.concat(F.lit(k + ":"), local)
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return out.otherwise(F.lit(None).cast("string"))
-
-
-def _turtle_uri(col: Column | str) -> Column:
-    inner = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(
-        _compactable(col), F.concat(F.lit("<"), inner, F.lit(">"))
-    )
-
-
-def turtle_line() -> Column:
-    """Format one triple row as a Turtle line (pure expressions):
-    prefixed names where compactable, `a` for rdf:type, N-Triples
-    escapes for literals."""
-    s, p, o = F.col("s"), F.col("p"), F.col("o")
-    subj = F.when(s.startswith("bnode:"), F.concat(F.lit("_:"), F.md5(s))).otherwise(
-        _turtle_uri("s")
-    )
-    rdf_type = EXPANSIONS["rdf"] + "type"
-    pred = F.when(p == rdf_type, F.lit("a")).otherwise(_turtle_uri("p"))
-    lit_body = F.concat(F.lit('"'), _escape_literal(o), F.lit('"'))
-    obj = (
-        F.when(F.col("o_type") == "uri", _turtle_uri("o"))
-        .when(F.col("o_type") == "bnode", F.concat(F.lit("_:"), F.md5(o)))
-        .when(F.col("o_lang").isNotNull(), F.concat(lit_body, F.lit("@"), F.col("o_lang")))
-        .when(
-            F.col("o_datatype").isNotNull(),
-            F.concat(lit_body, F.lit("^^"), _turtle_uri("o_datatype")),
-        )
-        .otherwise(lit_body)
-    )
-    return F.concat_ws(" ", subj, pred, obj, F.lit("."))
-
-
-def write_turtle(triples: DataFrame, path: str) -> None:
-    """K2 sink, distributed Turtle: each partition becomes one part
-    file that is a complete Turtle document (prefix header + lines) —
-    append-merge friendly, and `cat part-*` is itself valid Turtle
-    because repeated @prefix declarations are legal."""
-    # Entirely JVM-side: the header rides the partition's FIRST row as
-    # a codegen concat instead of an Arrow pass whose only job was to
-    # prepend 11 lines (shipping every line JVM->Python->JVM measured
-    # ~70% of the whole write). monotonically_increasing_id() is
-    # documented as partitionId·2^33 + rowInPartition, so low-33-bits
-    # == 0 identifies exactly the first row of every non-empty
-    # partition; empty partitions stay empty files, and the emitted
-    # bytes are identical to the old header-rows form (the text sink
-    # writes one '\n' per row either way).
-    header = TURTLE_FULL_HEADER.rstrip("\n") + "\n"
-    line = turtle_line()
-    first_in_partition = (
-        F.monotonically_increasing_id() % F.lit(1 << 33)
-    ) == 0
-    value = F.when(
-        first_in_partition, F.concat(F.lit(header), line)
-    ).otherwise(line)
-    _widen(triples).select(value.alias("value")).write.mode(
-        "overwrite"
-    ).text(path)
-
-
-# Turtle term alternations. Group map (regexp_extract indices):
-# subject: 1 <uri> | 2 _:bnode | 3 pname
-# predicate: 4 <uri> | 5 pname | 6 'a'
-# object: 7 <uri> | 8 _:bnode | 9 "literal" (10 @lang | 11 ^^<uri> |
-#         12 ^^pname) | 13 pname
-_PNAME = r'[A-Za-z][\w\-]*:[^\s<>"]+'
-_TTL_RE = (
-    rf'^(?:<([^>]*)>|(_:\S+)|({_PNAME}))\s+'
-    rf'(?:<([^>]*)>|({_PNAME})|(a))\s+'
-    rf'(?:<([^>]*)>|(_:\S+)|"([^"\\]*(?:\\.[^"\\]*)*)"'
-    rf'(?:@([A-Za-z\-]+)|\^\^<([^>]*)>|\^\^({_PNAME}))?|({_PNAME}))\s*\.\s*$'
-)
-
-
-def _expand_with(col: Column, pmap: dict[str, str]) -> Column:
-    """Dynamic prefixed-name expansion using the @prefix map collected
-    from the document header (the distributed analog of rdflib's
-    namespace manager)."""
-    out = None
-    for k, ns in pmap.items():
-        cond = col.startswith(k + ":")
-        val = F.concat(F.lit(ns), F.substring(col, len(k) + 2, 1_000_000))
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return col if out is None else out.otherwise(col)
-
-
-def read_turtle(spark, path: str) -> DataFrame:
-    """S4 source: line-oriented Turtle subset → triples DataFrame.
-
-    @prefix declarations are dimension-sized (a handful per document)
-    — collected once on the driver to build the expansion map; triple
-    lines parse per-line with one regex, fully distributed."""
-    lines = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    decls = (
-        lines.filter(F.col("value").startswith("@prefix"))
-        .select(
-            F.regexp_extract("value", r"@prefix\s+([A-Za-z][\w\-]*):", 1).alias("k"),
-            F.regexp_extract("value", r"<([^>]*)>", 1).alias("ns"),
-        )
-        .distinct()
-        .collect()
-    )
-    pmap = {r["k"]: r["ns"] for r in decls if r["k"]}
-    body = lines.filter(
-        ~F.col("value").startswith("@prefix") & ~F.col("value").startswith("#")
-    )
-    base, gs = _packed_groups_df(body, F.col("value"), _TTL_RE, 13)
-    raw = base.select(
-        gs[0].alias("s_uri"), gs[1].alias("s_bnode"), gs[2].alias("s_pn"),
-        gs[3].alias("p_uri"), gs[4].alias("p_pn"), gs[5].alias("p_a"),
-        gs[6].alias("o_uri"), gs[7].alias("o_bnode"), gs[8].alias("o_lit"),
-        gs[9].alias("o_lang_m"), gs[10].alias("o_dt_uri"),
-        gs[11].alias("o_dt_pn"), gs[12].alias("o_pn"),
-    )
-    o_lit = _unescape_literal(raw["o_lit"])
-    rdf_type = EXPANSIONS["rdf"] + "type"
-    is_obj_uri = (raw["o_uri"] != "") | (raw["o_pn"] != "")
-    return raw.select(
-        F.when(raw["s_uri"] != "", raw["s_uri"])
-        .when(raw["s_bnode"] != "", raw["s_bnode"])
-        .otherwise(_expand_with(raw["s_pn"], pmap))
-        .alias("s"),
-        F.when(raw["p_a"] != "", F.lit(rdf_type))
-        .when(raw["p_uri"] != "", raw["p_uri"])
-        .otherwise(_expand_with(raw["p_pn"], pmap))
-        .alias("p"),
-        F.when(raw["o_uri"] != "", raw["o_uri"])
-        .when(raw["o_pn"] != "", _expand_with(raw["o_pn"], pmap))
-        .when(raw["o_bnode"] != "", raw["o_bnode"])
-        .otherwise(o_lit)
-        .alias("o"),
-        F.when(is_obj_uri, F.lit("uri"))
-        .when(raw["o_bnode"] != "", F.lit("bnode"))
-        .otherwise(F.lit("literal"))
-        .alias("o_type"),
-        F.when(raw["o_dt_uri"] != "", raw["o_dt_uri"])
-        .when(raw["o_dt_pn"] != "", _expand_with(raw["o_dt_pn"], pmap))
-        .alias("o_datatype"),
-        F.when(raw["o_lang_m"] != "", raw["o_lang_m"]).alias("o_lang"),
-    )
-
-
 # N-Quads (S4): N-Triples + optional graph label as 4th term.
 _NQ_RE = (
     r'^(?:<([^>]*)>|(_:\S+))\s+<([^>]*)>\s+'
@@ -438,16 +239,3 @@ def read_nquads(spark, path: str) -> DataFrame:
         .when(raw["g_bnode"] != "", raw["g_bnode"])
         .alias("g"),
     )
-
-
-def turtle_text(triples: DataFrame, max_rows: int = 100_000) -> str:
-    """Combined-graph Turtle export (K2; razu/sip.py:42-49) for
-    demo/golden-test scale: canonically ordered, prefix header included.
-    Driver-side by design — the distributed form is write_ntriples."""
-    rows = (
-        triples.select(ntriples_line().alias("line"))
-        .orderBy("line")
-        .limit(max_rows)
-        .collect()
-    )
-    return TURTLE_HEADER + "\n" + "\n".join(r["line"] for r in rows) + "\n"

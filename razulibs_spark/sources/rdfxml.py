@@ -662,9 +662,10 @@ def write_trix(triples: DataFrame, path: str) -> None:
 # ---------------------------------------------------------------------------
 # TriG (S4) — Turtle + graph blocks. Graph context spans lines, so the
 # reader parses per FILE (stateful line walk), not per line; inside a
-# block the line grammar is the same line-oriented subset read_turtle
-# accepts (one triple per ' .'-terminated line, full IRIs or prefixed
-# names, typed/tagged literals).
+# block it reads a line-oriented Turtle subset (one triple per
+# ' .'-terminated line, full IRIs or prefixed names, typed/tagged
+# literals) — the shape write_trig emits, not the full grammar of
+# sources/turtle_full.py.
 # ---------------------------------------------------------------------------
 
 _TRIG_LINE_RE = None  # compiled lazily executor-side
@@ -848,7 +849,7 @@ def write_trig(triples: DataFrame, path: str) -> None:
     label are legal TriG and merge on parse, so the writer keeps full
     parallelism (`_widen`) instead of collapsing to one partition per
     graph; `cat part-*` is itself valid TriG, the same merge property
-    as write_turtle. Line building is vectorized pandas string ops
+    as write_turtle_grouped. Line building is vectorized pandas string ops
     (an iterrows loop measured ~10x slower at 750k triples)."""
     import pandas as pd
 

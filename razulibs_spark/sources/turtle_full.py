@@ -1,16 +1,14 @@
-"""Full Turtle 1.1 source — SURVEY.md §2.1 S4, foreign documents.
+"""Turtle 1.1 source and sink — SURVEY.md §2.1 S4/K2; the one module
+that knows Turtle.
 
-``read_turtle`` (rdf_io.py) parses the line-oriented subset this
-engine's own writer emits — fast, per-line, shuffle-free. But nearly
-all real-world Turtle (including anything rdflib serializes, i.e. the
+Real-world Turtle (including anything rdflib serializes, i.e. the
 reference's own output via razu/turtle.py:52-56) uses ``;``/``,``
 predicate/object lists, multi-line ``\"\"\"`` literals, anonymous
 blank nodes ``[...]`` and collections ``(...)`` — none of which are
-line-parseable. A user pointing ``read_turtle`` at third-party .ttl
-gets silent row loss (VERDICT r9 missing #1).
+line-parseable.
 
-This module is the foreign-document path: a recursive-descent Turtle
-1.1 parser (no rdflib in this image — written from the W3C grammar,
+The source is a recursive-descent Turtle 1.1 parser (no rdflib in
+the dependency set — written from the W3C grammar,
 https://www.w3.org/TR/turtle/#sec-grammar) distributed per FILE via
 ``binaryFile`` + ``mapInPandas``. Per-file tasks are the honest
 distribution unit once statements span lines: a statement boundary
@@ -31,6 +29,10 @@ Supported (the rdflib-serializer output surface):
   anonymous ``[...]`` blank nodes (fresh deterministic per-document
   labels), collections ``(...)`` expanded to rdf:first/rest/nil,
   comments. Triples emerge in the engine's canonical TRIPLE_SCHEMA.
+
+The sink, ``write_turtle_grouped``, writes the same predicate-list form
+(per-subject blocks, prefixed names where the local part is safe);
+``read_turtle_sharded`` reads one multi-GB dump split across tasks.
 """
 
 from __future__ import annotations
@@ -38,7 +40,10 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from razulibs_spark.operators.rdf import EXPANSIONS, _ordered_expansions, _sq
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -388,14 +393,17 @@ def parse_turtle(
 
 
 def read_turtle_full(
-    spark: SparkSession, path: str, glob: str = "*.ttl*"
+    spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:
-    """Foreign-Turtle corpus → triples DataFrame: one Arrow task per
-    .ttl / .ttl.gz document (binaryFile; gzip sniffed by magic — the
-    shape wikidata and most public RDF dumps ship in), full-grammar
-    parse inside the task, rows in the engine's canonical
-    TRIPLE_SCHEMA. Anonymous-bnode labels are prefixed with md5(file
-    path) so cross-document labels never collide after union."""
+    """Turtle corpus → triples DataFrame: one Arrow task per document
+    (binaryFile; gzip sniffed by magic — the .ttl.gz shape wikidata
+    and most public RDF dumps ship in), full-grammar parse inside the
+    task, rows in the engine's canonical TRIPLE_SCHEMA. Every file
+    under ``path`` is read (Spark's listing skips ``_SUCCESS`` and
+    ``.crc``), so ``write_turtle_grouped`` output reads back as is;
+    ``glob`` narrows the listing to matching file names. Anonymous-
+    bnode labels are prefixed with md5(file path) so cross-document
+    labels never collide after union."""
     import pandas as pd
 
     from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
@@ -427,10 +435,11 @@ def read_turtle_full(
                     {c: [r[c] for r in rows] for c in cols}
                 )
 
+    reader = spark.read.format("binaryFile")
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
     return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
+        reader.load(path)
         .select("path", "content")
         .mapInPandas(batches, schema=TRIPLE_SCHEMA)
     )
@@ -440,6 +449,54 @@ def read_turtle_full(
 # Grouped (rdflib-style) Turtle sink — the compact real-world form
 # ---------------------------------------------------------------------------
 
+# Every prefix the writer may compact with is declared in the header,
+# so each part file is a self-contained valid Turtle document and the
+# reader can re-expand without out-of-band state.
+TURTLE_FULL_HEADER = "".join(
+    f"@prefix {k}: <{v}> .\n" for k, v in sorted(EXPANSIONS.items())
+)
+
+# Local part of a prefixed name we are willing to emit (conservative
+# PN_LOCAL subset); anything else stays a full <IRI>. A trailing '.'
+# is not PN_LOCAL: `ldto:v1.` would read as `ldto:v1` plus a
+# statement terminator.
+_PN_LOCAL_RE = r"^[A-Za-z0-9_](?:[A-Za-z0-9_.\-]*[A-Za-z0-9_\-])?$"
+
+
+def _compactable(col: Column | str) -> Column:
+    """Prefixed-name form of an absolute URI when the local part is
+    safe to emit, else null. Frequency-ordered chain (r13): safe
+    because the namespace set is pairwise prefix-free (guarded in
+    operators/rdf.py) — and the per-branch rlike then runs only for
+    the branch whose startswith matches, ~2 branches in instead of
+    ~11. A column NAME (str) builds the chain as one F.expr CASE
+    parse — ~90 py4j round-trips fewer per call (r13, driver-side
+    construction cost; same expression tree)."""
+    if isinstance(col, str):
+        arms = "".join(
+            f"WHEN startswith(`{col}`, {_sq(ns)}) AND "
+            f"substring(`{col}`, {len(ns) + 1}, 1000000) RLIKE "
+            f"{_sq(_PN_LOCAL_RE)} THEN "
+            f"concat({_sq(k + ':')}, "
+            f"substring(`{col}`, {len(ns) + 1}, 1000000)) "
+            for k, ns in _ordered_expansions()
+        )
+        return F.expr(f"CASE {arms}ELSE CAST(NULL AS STRING) END")
+    out = None
+    for k, ns in _ordered_expansions():
+        local = F.substring(col, len(ns) + 1, 1_000_000)
+        cond = col.startswith(ns) & local.rlike(_PN_LOCAL_RE)
+        val = F.concat(F.lit(k + ":"), local)
+        out = F.when(cond, val) if out is None else out.when(cond, val)
+    return out.otherwise(F.lit(None).cast("string"))
+
+
+def _turtle_uri(col: Column | str) -> Column:
+    inner = F.col(col) if isinstance(col, str) else col
+    return F.coalesce(
+        _compactable(col), F.concat(F.lit("<"), inner, F.lit(">"))
+    )
+
 
 def write_turtle_grouped(
     triples: DataFrame,
@@ -448,35 +505,31 @@ def write_turtle_grouped(
     pred_cap: int = 64,
 ) -> None:
     """K2 sink, predicate-list Turtle: per-SUBJECT blocks with ``;``
-    predicate lists and ``,`` object lists — the form rdflib (and so
-    the reference, razu/turtle.py:52-56) actually serializes, where
-    write_turtle's one-triple-per-line output is the machine-friendly
-    subset (and ``write_ntriples`` remains the bulk path for raw
-    triple volume). Entirely JVM-side: terms format in codegen; the
-    grouping keys are SALTED by block id so no aggregation buffer and
-    no output row is ever unbounded on a skewed subject — Turtle
+    predicate lists and ``,`` object lists — the form rdflib (and so the
+    reference, razu/turtle.py:52-56) actually serializes; this is the
+    engine's one Turtle sink (``write_ntriples`` remains the bulk path
+    for raw triple volume). Entirely JVM-side: terms format in codegen;
+    the grouping keys are SALTED by block id so no aggregation buffer
+    and no output row is ever unbounded on a skewed subject — Turtle
     explicitly permits repeating a subject across blocks, so a
     super-node subject (a provenance hub with 10⁶+ triples at 100×)
-    spills across blocks of at most ``obj_cap`` objects per
-    objectList and ``pred_cap`` predicate entries per block instead
-    of becoming one multi-GB collect_list row that AQE cannot split.
-    Block ids come from windowed row_numbers (partitioned narrowly by
-    (s,p) then s; Spark's window sorter spills to disk, unlike a
-    collect_list buffer), so output stays byte-deterministic and —
-    for every subject under the caps — byte-identical to the uncapped
-    form. The prefix header rides each partition's first row.
-    Embedded newlines inside a block are literal text-sink bytes;
-    literals themselves carry N-Triples escapes so no literal can
-    smuggle a fake statement terminator. Parse back with
-    read_turtle_full (the line reader cannot see this form — that
-    asymmetry is the point)."""
-    from pyspark.sql import functions as F
-
-    from razulibs_spark.sources.rdf_io import TURTLE_FULL_HEADER
-
+    spills across blocks of at most ``obj_cap`` objects per objectList
+    and ``pred_cap`` predicate entries per block instead of becoming one
+    multi-GB collect_list row that AQE cannot split. Block ids come from
+    windowed row_numbers (partitioned narrowly by (s,p) then s; Spark's
+    window sorter spills to disk, unlike a collect_list buffer), so
+    output stays byte-deterministic and — for every subject under the
+    caps — byte-identical to the uncapped form. The prefix header rides
+    each partition's first row. Embedded newlines inside a block are
+    literal text-sink bytes; literals themselves carry N-Triples escapes
+    so no literal can smuggle a fake statement terminator. Parse back
+    with read_turtle_full."""
     blocks = grouped_turtle_blocks(triples, obj_cap, pred_cap)
     block = F.concat(F.col("sj"), F.lit(" "), F.col("po"), F.lit(" ."))
     header = TURTLE_FULL_HEADER.rstrip("\n") + "\n"
+    # monotonically_increasing_id() is partitionId·2^33 + rowInPartition,
+    # so low-33-bits == 0 is exactly the first row of every non-empty
+    # partition: each part file opens with the header, JVM-side
     first_in_partition = (
         F.monotonically_increasing_id() % F.lit(1 << 33)
     ) == 0
@@ -494,13 +547,8 @@ def grouped_turtle_blocks(
     plan tests can assert the block-cap shape (no unbounded
     per-subject aggregation) without a filesystem write."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from razulibs_spark.operators.rdf import EXPANSIONS
-    from razulibs_spark.sources.rdf_io import (
-        _escape_literal,
-        _turtle_uri,
-    )
+    from razulibs_spark.sources.rdf_io import _escape_literal
 
     # r13 shuffle shape: ONE full-size exchange, keyed on the RAW
     # (s, p) columns, with every formatting expression evaluated
@@ -765,8 +813,6 @@ def read_turtle_sharded(
        why the per-file reader remains the full-grammar path).
 
     Returns the TRIPLE_SCHEMA frame, like the other K2 sources."""
-    from pyspark.sql import functions as F
-
     from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
 
     sc = spark.sparkContext

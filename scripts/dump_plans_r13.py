@@ -14,7 +14,6 @@ from razulibs_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 DEFAULT = [
-    "k2_turtle_roundtrip",
     "k2_ntriples_roundtrip",
     "k2_turtle_sharded_roundtrip",
     "k2_turtle_grouped_roundtrip",

@@ -34,8 +34,8 @@ SCALES = {
 def main() -> None:
     import razulibs_spark.queries as Q
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
-    from razulibs_spark.sources.rdf_io import TURTLE_FULL_HEADER
     from razulibs_spark.sources.turtle_full import (
+        TURTLE_FULL_HEADER,
         grouped_turtle_blocks,
         read_turtle_full,
         read_turtle_sharded,

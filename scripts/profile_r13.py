@@ -34,33 +34,12 @@ def timed(spark, name, fn, runs=2):
 
 
 def profile_turtle(spark, runs):
-    from razulibs_spark.operators.rdf import (
-        compact_triples,
-        expand_triples,
-    )
+    from razulibs_spark.operators.rdf import expand_triples
     from razulibs_spark.queries import _o2_triples_full
-    from razulibs_spark.sources.rdf_io import read_turtle, write_turtle
 
-    path = "/root/repo/.scratch/prof_turtle_rt"
     o2 = lambda: _o2_triples_full(spark, SF_DIR)
     timed(spark, "o2_triples_full(noop)", lambda: noop(o2()), runs)
     timed(spark, "expand(noop)", lambda: noop(expand_triples(o2())), runs)
-    timed(
-        spark, "expand+write_turtle",
-        lambda: write_turtle(expand_triples(o2()), path), runs,
-    )
-    timed(
-        spark, "read.text only",
-        lambda: noop(spark.read.text(path)), runs,
-    )
-    timed(
-        spark, "read_turtle(noop)",
-        lambda: noop(read_turtle(spark, path)), runs,
-    )
-    timed(
-        spark, "read_turtle+compact(noop)",
-        lambda: noop(compact_triples(read_turtle(spark, path))), runs,
-    )
 
 
 def profile_pagerank(spark, runs):
@@ -97,8 +76,8 @@ def profile_pagerank(spark, runs):
 def profile_sharded(spark, runs):
     from razulibs_spark.operators.rdf import compact_triples, expand_triples
     from razulibs_spark.queries import _o2_triples_full
-    from razulibs_spark.sources.rdf_io import TURTLE_FULL_HEADER
     from razulibs_spark.sources.turtle_full import (
+        TURTLE_FULL_HEADER,
         grouped_turtle_blocks,
         read_turtle_sharded,
     )

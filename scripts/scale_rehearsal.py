@@ -26,7 +26,6 @@ sys.path.insert(0, "/root/repo")
 HEAVY = [
     "text_pdf_extract",
     "k2_turtle_sharded_roundtrip",
-    "k2_turtle_roundtrip",
     "graph_pagerank",
     "dedup_minhash_lsh_ml",
     "k2_turtle_grouped_roundtrip",

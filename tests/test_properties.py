@@ -1226,7 +1226,7 @@ def test_prefix_expr_path_equals_builder_path(spark):
         compact_prefixed,
         expand_prefixed,
     )
-    from razulibs_spark.sources.rdf_io import _compactable
+    from razulibs_spark.sources.turtle_full import _compactable
 
     rows = [
         ("ldto:naam",),

@@ -1,9 +1,9 @@
 """Full-grammar Turtle parser (sources/turtle_full.py) — the foreign
 document path. Fixtures are written in the style rdflib's serializer
 emits (predicate lists, object lists, anonymous bnodes, collections,
-triple-quoted literals) — the exact surface the line-oriented
-read_turtle cannot see (VERDICT r9 missing #1; reference parses this
-via rdflib, razu/turtle.py:6-32)."""
+triple-quoted literals) — the surface no line-oriented reader can see
+(VERDICT r9 missing #1; reference parses this via rdflib,
+razu/turtle.py:6-32)."""
 
 import pytest
 
@@ -169,17 +169,23 @@ def test_write_turtle_grouped_emits_predicate_lists(spark, tmp_path):
     """The grouped sink must actually EMIT ';'/',' syntax (not fall
     back to one-triple-per-line) and round-trip through the full
     parser."""
-    from razulibs_spark.operators.rdf import TRIPLE_SCHEMA
+    from razulibs_spark.operators.rdf import EXPANSIONS, TRIPLE_SCHEMA
     from razulibs_spark.sources.turtle_full import (
         read_turtle_full,
         write_turtle_grouped,
     )
 
+    # IRIs under a bound namespace whose local part ends in '.' must
+    # stay <IRI>: `ldto:v1.` would read as `ldto:v1` plus a terminator
+    dot = EXPANSIONS["ldto"] + "v1."
     rows = [
         ("http://e/s1", "http://e/p1", "a", "literal", None, None),
         ("http://e/s1", "http://e/p1", "b", "literal", None, None),
         ("http://e/s1", "http://e/p2", "http://e/o", "uri", None, None),
         ("http://e/s2", "http://e/p1", "solo", "literal", None, "nl"),
+        (dot, "http://e/p1", "x", "literal", None, None),
+        ("http://e/s3", "http://e/p2", dot, "uri", None, None),
+        ("http://e/s3", "http://e/p1", "7", "literal", dot, None),
     ]
     df = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     out = tmp_path / "grouped"
@@ -191,9 +197,29 @@ def test_write_turtle_grouped_emits_predicate_lists(spark, tmp_path):
     )
     assert " ;\n" in text  # predicate list
     assert '"a", "b"' in text  # object list
-    back = read_turtle_full(spark, str(out), glob="part-*")
-    got = {(r["s"], r["p"], r["o"], r["o_lang"]) for r in back.collect()}
-    assert got == {(s, p, o, lang) for s, p, o, _, _, lang in rows}
+    # no glob: the sink's part-*.txt files are the whole listing
+    back = read_turtle_full(spark, str(out))
+    assert {tuple(r) for r in back.collect()} == set(rows)
+
+
+def test_read_rdf_parses_predicate_list_turtle(spark, tmp_path):
+    """read_rdf's Turtle dispatch reads the full grammar: ';'/','
+    lists come back as the same triples parse_turtle yields."""
+    from razulibs_spark.sources.jsonld import read_rdf
+
+    doc = _ttl(
+        'ex:s a ex:T ;\n'
+        '  ex:p "a", "b"@nl ;\n'
+        '  ex:q ex:o1, ex:o2 .\n'
+        'ex:t ex:p 3 .\n'
+    )
+    path = tmp_path / "doc.ttl"
+    path.write_text(doc)
+    got = [tuple(r) for r in read_rdf(spark, str(path)).collect()]
+    assert sorted(got, key=str) == sorted(
+        (tuple(r.values()) for r in parse_turtle(doc)), key=str
+    )
+    assert len(got) == 6
 
 
 def test_read_turtle_full_gzipped_documents(spark, tmp_path):
